@@ -15,7 +15,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // experiment hook: semicolon-separated k=v runtime confs (e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.graft.edgeIndex.rowsPerPartition=1").
+    // SPARK_GRAFT_EXTRA_CONF="spark.graft.compiler.localMapMaxRows=0").
     // The applied string is echoed into the JSON line so a certified
     // artifact can never silently carry a non-default conf, and a
     // non-runtime-settable key warns instead of aborting the run.

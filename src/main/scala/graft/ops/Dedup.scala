@@ -138,15 +138,6 @@ object Dedup {
         col("x.id") < col("y.id"))
   }
 
-  /** `numHashes` MinHash values of a shingle array. Permutation family
-    * h_i(x) = (a_i * ([[portableHash31]](x)) + b_i) mod p with p = 2^31−1 —
-    * deterministic and seedless; intermediates stay < 2^62 so the
-    * expressions are safe under ANSI overflow checking. */
-  def minHashes(shingleArr: Column, numHashes: Int): Column =
-    minHashesFromHashed(
-      graft.functions.VectorFunctions.md5_hash31_array(shingleArr),
-      numHashes)
-
   /** MinHash from pre-hashed shingles: one fused codegen'd loop computing
     * all `numHashes` permutation minima
     * ([[graft.functions.MinHashSignature]]). */

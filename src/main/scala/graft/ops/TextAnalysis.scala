@@ -158,33 +158,6 @@ object TextAnalysis {
       .otherwise(graft.functions.VectorFunctions.word_shingles(w, n))
   }
 
-  /** Fraction of lines that repeat an earlier line (0 for no lines). */
-  def dupLineFrac(text: Column): Column = {
-    val ls = textLines(text)
-    when(size(ls) === 0, lit(0.0)).otherwise(
-      lit(1.0) - size(array_distinct(ls)).cast("double")
-        / size(ls).cast("double"))
-  }
-
-  /** Fraction of line characters belonging to repeated lines. */
-  def dupLineCharFrac(text: Column): Column = {
-    val ls = textLines(text)
-    val tot = aggregate(ls, lit(0L), (a, x) => a + length(x).cast("long"))
-    val dis = aggregate(array_distinct(ls), lit(0L),
-      (a, x) => a + length(x).cast("long"))
-    when(tot === 0, lit(0.0)).otherwise(
-      lit(1.0) - dis.cast("double") / tot.cast("double"))
-  }
-
-  /** Fraction of word n-gram occurrences that are repeats (0 when the
-    * document has fewer than n words). */
-  def dupNgramFrac(text: Column, n: Int): Column = {
-    val g = wordNgrams(text, n)
-    when(size(g) === 0, lit(0.0)).otherwise(
-      lit(1.0) - size(array_distinct(g)).cast("double")
-        / size(g).cast("double"))
-  }
-
   /** Per-document repetition stats: line-level duplicate fractions,
     * repeated 5-gram fraction, and the characters covered by the most
     * frequent word 2-gram as a fraction of total word characters

@@ -270,9 +270,6 @@ object SltRunner {
   private def normalizeExpectedRows(expected: Seq[String]): Seq[String] =
     expected.map(_.replace("\t", ""))
 
-  def renderRows(df: DataFrame): Seq[String] =
-    df.collect().toSeq.map(renderRow(_, boolAsInt = false))
-
   private def renderRow(r: Row, boolAsInt: Boolean): String =
     (0 until r.length).map { i =>
       r.get(i) match {
